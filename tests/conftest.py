@@ -10,8 +10,9 @@ SF_CORRECT = "/root/testdata/sf0.01"
 # The `slow` tier (see pytest.ini): node ids measured >= 12 s in the full
 # --durations profile (374 passed, r16). Centralized here — one list to
 # audit/update from a durations run — instead of 56 scattered decorators.
-# The default tier keeps at least one cheap test over every operator these
-# cover; the slow tier re-runs with `-m slow`.
+# The default run includes them; `-m "not slow"` leaves them out, and the
+# remaining tests keep at least one cheap test over every operator these
+# cover.
 _SLOW_TESTS = {
     "test_ann_delta_stack_auto_compacts",
     "test_pagerank_dangling_mass_redistribution",

@@ -7,11 +7,9 @@ registration, promotion, or rows-only declaration lands without re-running
 from __future__ import annotations
 
 import re
-import sys
 
-sys.path.insert(0, "/root/repo")
-
-from learn_hbase_spark import queries as Q  # noqa: E402
+from learn_hbase_spark import queries as Q
+from test_oracle_parity import _ROWS_ONLY_CHECKS
 
 
 def _doc_rows() -> dict[str, str]:
@@ -56,11 +54,8 @@ def test_queries_md_rows_match_registry_and_rows_only_declarations():
         )
     # the doc's rows-only set must equal the declared secondary-check
     # table, so an undeclared rows-only query can't hide in either place
-    sys.path.insert(0, "/root/repo/tools")
-    import record_verified_hashes as rvh
-
     doc_rows_only = {n for n, c in rows.items() if c == "rows-only"}
-    assert doc_rows_only == set(rvh._ROWS_ONLY_CHECKS), (
+    assert doc_rows_only == set(_ROWS_ONLY_CHECKS), (
         f"rows-only drift: doc={sorted(doc_rows_only)} vs declared="
-        f"{sorted(rvh._ROWS_ONLY_CHECKS)}"
+        f"{sorted(_ROWS_ONLY_CHECKS)}"
     )

@@ -13,11 +13,8 @@ def main() -> int:
     sys.path.insert(0, "/root/repo")
     from learn_hbase_spark import queries as Q
 
-    # REGISTRATION order, not the driver-facing rotation: the rotation
-    # reshuffles with every round's verification state, which would make
-    # this doc (and its freshness pytest) churn with no content change.
-    qs = dict(Q._QUERIES)
-    oracles = dict(Q._ORACLES)
+    qs = Q.queries()
+    oracles = Q.oracle_sql()
     print("# Query registry")
     print()
     print(
