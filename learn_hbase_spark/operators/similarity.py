@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 # Crash-safe artifact mechanics (tombstone-first, rename-not-rmtree,
@@ -1233,42 +1233,84 @@ def _pq_seeds(corpus: DataFrame, k_codes: int, id_col: str, vec_col: str):
     return np.stack([np.asarray(v, dtype=np.float64) for v in rows])
 
 
+def _adc_np(Q, seeds, m: int, sub: int):
+    """THE ADC arithmetic, shared by :func:`_adc_table` and the frozen
+    probe's :func:`_probe_kernel` so their distances are bit-identical:
+    an ``(n, m, k_codes)`` array of the round-6 squared-L2 partial
+    distance from each query's ``m`` subvectors to every codeword."""
+    import numpy as np
+
+    return np.stack(
+        [
+            np.round(
+                (
+                    (Q[:, None, j * sub:(j + 1) * sub]
+                     - seeds[None, :, j * sub:(j + 1) * sub]) ** 2
+                ).sum(axis=-1),
+                6,
+            )
+            for j in range(m)
+        ],
+        axis=1,
+    )
+
+
 def _adc_table(seeds, m: int, sub: int):
     """Shared ADC distance-table kernel for :func:`pq_adc_topk` and
     :func:`ivf_pq_topk` (extracted so the two search paths cannot
     drift): a ``mapInPandas`` generator that, per query vector, emits
-    the round-6 squared-L2 partial distance from each of its ``m``
-    subvectors to every codeword — the nq x m x k_codes bounded table
-    that broadcasts to the corpus-side code join."""
+    the round-6 squared-L2 partial distance (:func:`_adc_np`) from each
+    of its ``m`` subvectors to every codeword — the nq x m x k_codes
+    bounded table that broadcasts to the corpus-side code join. One
+    long frame per Arrow batch, built by repeat/tile."""
     import numpy as np
     import pandas as pd
+
+    n_codes = seeds.shape[0]
+    subspace = np.repeat(np.arange(m, dtype=np.int32), n_codes)
+    code = np.tile(np.arange(n_codes, dtype=np.int32), m)
 
     def _tab(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             Q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-            frames = []
-            for j in range(m):
-                Qs = Q[:, j * sub:(j + 1) * sub]
-                Ss = seeds[:, j * sub:(j + 1) * sub]
-                d = np.round(
-                    ((Qs[:, None, :] - Ss[None, :, :]) ** 2).sum(axis=-1), 6
-                )
-                for c in range(seeds.shape[0]):
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": pdf["_id"],
-                                "subspace": np.int32(j),
-                                "code": np.int32(c),
-                                "pdist": d[:, c],
-                            }
-                        )
-                    )
-            yield pd.concat(frames)
+            n = len(Q)
+            yield pd.DataFrame(
+                {
+                    "query_id": np.repeat(pdf["_id"].to_numpy(), m * n_codes),
+                    "subspace": np.tile(subspace, n),
+                    "code": np.tile(code, n),
+                    "pdist": _adc_np(Q, seeds, m, sub).reshape(-1),
+                }
+            )
 
     return _tab
+
+
+def _probe_kernel(cents, probes: int, seeds, m: int, sub: int):
+    """``mapInPandas`` body for :func:`ivf_pq_topk_frozen`: ONE pass over
+    the queries emitting ``(query_id, cells array<int>, adc
+    array<double>)`` — the ``probes`` nearest cells (:func:`_topk_cells_np`,
+    the :func:`_cell_assigner` rule) and the flattened m x k_codes ADC
+    table (:func:`_adc_np`, the :func:`_adc_table` arithmetic; position
+    ``subspace * k_codes + code``). The JVM explodes both, so the probe
+    crosses into Python once instead of once per half."""
+    import numpy as np
+    import pandas as pd
+
+    def fn(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            Q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
+            cells = _topk_cells_np(Q, cents, probes).astype("int32")
+            adc = _adc_np(Q, seeds, m, sub).reshape(len(Q), -1)
+            yield pd.DataFrame(
+                {"query_id": pdf["_id"], "cells": list(cells), "adc": list(adc)}
+            )
+
+    return fn
 
 
 def pq_codes(
@@ -1763,12 +1805,22 @@ def freeze_ivf_pq(
 
 def ivf_pq_meta(spark, path: str):
     """The artifact's one meta row, or None if absent/torn (meta is
-    written last, so its presence certifies a complete freeze)."""
+    written last, so its presence certifies a complete freeze). Read
+    under the pinned :data:`_META_SCHEMA` (no schema-inference job);
+    pre-``gen`` artifacts read as gen=0, pre-``layout`` ones as
+    layout=1."""
     try:
-        rows = spark.read.parquet(f"{path}/meta").collect()
+        rows = spark.read.schema(_META_SCHEMA).parquet(f"{path}/meta").collect()
     except Exception:
         return None
-    return rows[0] if rows else None
+    if not rows:
+        return None
+    d = rows[0].asDict()
+    return Row(**{
+        **d,
+        "gen": 0 if d["gen"] is None else d["gen"],
+        "layout": 1 if d["layout"] is None else d["layout"],
+    })
 
 
 def ivf_pq_fresh(
@@ -1797,7 +1849,7 @@ def ivf_pq_fresh(
         and meta["k_codes"] == k_codes
         # an older physical layout reads as stale, so freeze-when-stale
         # callers transparently upgrade the artifact
-        and _meta_layout(meta) == _LAYOUT_VERSION
+        and meta["layout"] == _LAYOUT_VERSION
     )
 
 
@@ -1836,10 +1888,6 @@ def _meta_values(meta_row) -> tuple:
     )
 
 
-def _meta_layout(meta_row) -> int:
-    return meta_row.asDict().get("layout", 1)
-
-
 def _strip_file_scheme(p: str) -> str:
     """file:// URI → local path, PREFIX-only (a substring replace would
     mangle any path merely containing 'file:'). Shared by the local-stat
@@ -1851,12 +1899,25 @@ def _strip_file_scheme(p: str) -> str:
     return p
 
 
-# one-entry memo for the frozen quantizer matrices: keyed by (path, meta
-# row) so any refreeze/extend — which rewrites meta — naturally invalidates
-# it, while streaming drains (many foreachBatch invocations over one frozen
-# artifact) stop re-collecting two tables per micro-batch. Single-slot on
-# purpose: the working set is "the artifact this process is maintaining".
+# one-entry memo for what the probe reads from an artifact's fixed
+# tables — the quantizer matrices and the base cells/codes schemas: keyed
+# by (path, meta row) so any refreeze/extend — which rewrites meta —
+# naturally invalidates it, while streaming drains (many foreachBatch
+# invocations over one frozen artifact) and serving probes stop
+# re-collecting two tables and re-inferring two schemas per call (a
+# compact restores the same meta row over base tables of the same
+# schema). Single-slot on purpose: the working set is "the artifact this
+# process is maintaining".
 _QUANTIZER_CACHE: dict = {}
+
+
+def _artifact_memo(path: str, meta) -> dict:
+    """The memo entry for ``(path, meta row)``, evicting any other."""
+    key = (path, tuple(meta))
+    if key not in _QUANTIZER_CACHE:
+        _QUANTIZER_CACHE.clear()
+        _QUANTIZER_CACHE[key] = {}
+    return _QUANTIZER_CACHE[key]
 
 
 def _load_quantizers(spark, path: str, meta):
@@ -1869,10 +1930,9 @@ def _load_quantizers(spark, path: str, meta):
     real negative-cosine cells. Memoized per (path, meta row) — the
     fingerprint contract (meta.src tracks the corpus) is what makes the
     key sound."""
-    key = (path, tuple(meta))
-    hit = _QUANTIZER_CACHE.get(key)
-    if hit is not None:
-        return hit
+    memo = _artifact_memo(path, meta)
+    if "quantizers" in memo:
+        return memo["quantizers"]
     import numpy as np
 
     m, dim = int(meta["m"]), int(meta["dim"])
@@ -1887,9 +1947,26 @@ def _load_quantizers(spark, path: str, meta):
     for r in cb_rows:
         j = r["subspace"]
         seeds[r["code"], j * sub:(j + 1) * sub] = r["sv"]
-    _QUANTIZER_CACHE.clear()
-    _QUANTIZER_CACHE[key] = (cents, seeds)
+    memo["quantizers"] = (cents, seeds)
     return cents, seeds
+
+
+def _read_base(spark, path: str, meta, table: str) -> DataFrame:
+    """The artifact's base ``cells``/``codes`` table read under its
+    memoized schema (inferred once per (path, meta row))."""
+    schemas = _artifact_memo(path, meta).setdefault("schemas", {})
+    if table not in schemas:
+        schemas[table] = spark.read.parquet(f"{path}/{table}").schema
+    return spark.read.schema(schemas[table]).parquet(f"{path}/{table}")
+
+
+def _read_delta(spark, p: str) -> DataFrame | None:
+    """A streaming delta table without its ``_batch`` column, or None when
+    absent: one Hadoop-FS ``exists`` first, so the common absent case
+    costs no schema-inference attempt."""
+    fs, jp = _hfs(spark, p)
+    delta = _try_parquet(spark, p) if fs.exists(jp) else None
+    return None if delta is None else delta.drop("_batch")
 
 
 def ivf_pq_topk_frozen(
@@ -1904,15 +1981,15 @@ def ivf_pq_topk_frozen(
     """IVF-PQ top-k over a :func:`freeze_ivf_pq` artifact — the PROBE-ONLY
     deployment path: centroids + codebook load to the driver (bounded:
     nlist + m*k_codes rows, the k-means-centroid class), the query side
-    computes its probe cells and ADC distance tables in the same
-    Arrow-batched kernels as `ivf_pq_topk`, and the corpus side is the
-    WRITTEN ``cells``/``codes`` int tables — the raw corpus is never
-    touched. Same math, joins, ranking, and round-6 contract as
-    `ivf_pq_topk` (shared kernels: :func:`_cell_assigner`,
-    :func:`_adc_table`), so the frozen probe inherits its full DuckDB
-    oracle. At 100 TB the probe cost is (query set) x (probed cells'
-    codes) — independent of corpus encode cost, which is the point of
-    freezing.
+    computes its probe cells and ADC distance tables in ONE Arrow pass
+    (:func:`_probe_kernel`, checkpointed once and exploded in the JVM),
+    and the corpus side is the WRITTEN ``cells``/``codes`` int tables —
+    the raw corpus is never touched. Same math, joins, ranking, and
+    round-6 contract as `ivf_pq_topk` (the kernel shares its cell rule
+    :func:`_topk_cells_np` and ADC arithmetic :func:`_adc_np`), so the
+    frozen probe inherits its full DuckDB oracle. At 100 TB the probe
+    cost is (query set) x (probed cells' codes) — independent of corpus
+    encode cost, which is the point of freezing.
 
     ``allowed`` (optional, a frame with ``id_col``) enables FILTERED
     vector search — top-k among the vectors satisfying a metadata
@@ -1931,25 +2008,31 @@ def ivf_pq_topk_frozen(
         # loudly instead of probing a torn index
         raise ValueError(f"no complete IVF-PQ artifact at {path}")
     m, dim = int(meta["m"]), int(meta["dim"])
-    sub = dim // m
     cents, seeds = _load_quantizers(spark, path, meta)
+    n_codes = seeds.shape[0]
 
-    q_prepped = queries.select(
+    q = queries.select(
         F.col(id_col).alias("_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    )
-    q_cells = q_prepped.mapInPandas(
-        _cell_assigner(cents, min(nprobe, cents.shape[0])),
-        schema="_id long, _v array<double>, _cell int",
-    ).select(
-        F.col("_id").alias("query_id"), F.col("_cell").alias("cell")
+    ).mapInPandas(
+        _probe_kernel(cents, min(nprobe, cents.shape[0]), seeds, m, dim // m),
+        schema="query_id long, cells array<int>, adc array<double>",
     ).localCheckpoint()
     # ^ localCheckpoint BEFORE the collect below: the probed-cell
-    # literals and the joined q_cells must come from ONE materialization
-    # — re-evaluating a non-deterministic query source (sampled/
-    # rand-derived) in two separate jobs could otherwise collect a
+    # literals, the joined q_cells and the ADC table must come from ONE
+    # materialization — re-evaluating a non-deterministic query source
+    # (sampled/rand-derived) in separate jobs could otherwise collect a
     # probed set that diverges from the join's cells and silently drop
     # candidate cells.
+    q_cells = q.select("query_id", F.explode("cells").alias("cell"))
+    table = q.select(
+        "query_id", F.posexplode("adc").alias("pos", "pdist")
+    ).selectExpr(
+        "query_id",
+        f"CAST(pos DIV {n_codes} AS INT) AS subspace",
+        f"CAST(pos % {n_codes} AS INT) AS code",
+        "pdist",
+    )
 
     # The probed-cell set pulled to the driver and pushed as a LITERAL
     # IN filter on the corpus scan: it is ≤ nlist distinct ints no
@@ -1965,10 +2048,10 @@ def ivf_pq_topk_frozen(
     # corpus side = base tables ∪ any streaming delta segments
     # (ann_index_ingest_batch's per-drain landings; compact_ivf_pq folds
     # the stack so a long-maintained artifact's union stays short)
-    corpus_cells = spark.read.parquet(f"{path}/cells")
-    cells_delta = _try_parquet(spark, f"{path}/cells_delta")
+    corpus_cells = _read_base(spark, path, meta, "cells")
+    cells_delta = _read_delta(spark, f"{path}/cells_delta")
     if cells_delta is not None:
-        corpus_cells = corpus_cells.unionByName(cells_delta.drop("_batch"))
+        corpus_cells = corpus_cells.unionByName(cells_delta)
     corpus_cells = corpus_cells.filter(F.col("cell").isin(probed)).select(
         F.col(id_col).alias("neighbor_id"), "cell"
     )
@@ -1985,10 +2068,10 @@ def ivf_pq_topk_frozen(
         "query_id", "neighbor_id"
     )
 
-    codes = spark.read.parquet(f"{path}/codes")
-    codes_delta = _try_parquet(spark, f"{path}/codes_delta")
+    codes = _read_base(spark, path, meta, "codes")
+    codes_delta = _read_delta(spark, f"{path}/codes_delta")
     if codes_delta is not None:
-        codes = codes.unionByName(codes_delta.drop("_batch"))
+        codes = codes.unionByName(codes_delta)
     if "cell" in codes.columns:
         # layout v2: the BIG table also prunes on the literal probed-cell
         # set — at fixed nlist that is a nprobe/nlist scan reduction on
@@ -1997,10 +2080,6 @@ def ivf_pq_topk_frozen(
         codes = codes.filter(F.col("cell").isin(probed))
     codes = codes.select(
         F.col(id_col).alias("neighbor_id"), "subspace", "code"
-    )
-    table = q_prepped.mapInPandas(
-        _adc_table(seeds, m, sub),
-        schema="query_id long, subspace int, code int, pdist double",
     )
     joined = cand.join(codes, "neighbor_id")
     if cells_delta is not None or codes_delta is not None:
@@ -2430,12 +2509,12 @@ def extend_ivf_pq(
     meta = ivf_pq_meta(spark, path)
     if meta is None or int(meta["nlist"]) < 0:
         raise ValueError(f"no complete IVF-PQ artifact at {path} to extend")
-    if _meta_layout(meta) != _LAYOUT_VERSION:
+    if meta["layout"] != _LAYOUT_VERSION:
         # appending current-layout rows onto an older base would leave
         # MIXED codes schemas under one table — refuse loudly; a
         # refreeze both upgrades the layout and admits the new vectors
         raise ValueError(
-            f"artifact at {path} has layout {_meta_layout(meta)} "
+            f"artifact at {path} has layout {meta['layout']} "
             f"(current {_LAYOUT_VERSION}) — refreeze to upgrade before "
             "extending"
         )
@@ -2575,10 +2654,10 @@ def ann_index_ingest_batch(
             meta = ivf_pq_meta(spark, path)
     if meta is None or int(meta["nlist"]) < 0:
         raise ValueError(f"no complete IVF-PQ artifact at {path} to ingest")
-    if _meta_layout(meta) != _LAYOUT_VERSION:
+    if meta["layout"] != _LAYOUT_VERSION:
         # same refusal as extend_ivf_pq: never mix codes schemas
         raise ValueError(
-            f"artifact at {path} has layout {_meta_layout(meta)} "
+            f"artifact at {path} has layout {meta['layout']} "
             f"(current {_LAYOUT_VERSION}) — refreeze to upgrade before "
             "streaming into it"
         )
@@ -2701,10 +2780,10 @@ def compact_ivf_pq(spark, path: str) -> None:
                 )
             _fs_rename(spark, tmp_p, base_p)
         else:
-            delta = _try_parquet(spark, delta_p)
+            delta = _read_delta(spark, delta_p)
             if delta is not None:
                 folded = base.unionByName(
-                    delta.drop("_batch"), allowMissingColumns=False
+                    delta, allowMissingColumns=False
                 ).distinct()
                 if "cell" in folded.columns:
                     # preserve the layout-v2 cell-sorted property across

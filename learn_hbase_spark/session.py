@@ -55,6 +55,14 @@ def get_session(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
+    if master.startswith("local"):
+        # Python workers skip Spark's archives (see pyworker.py): the
+        # daemon module must import from any working directory, so the
+        # package's parent rides on the workers' PYTHONPATH.
+        pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = builder.config(
+            "spark.python.daemon.module", "learn_hbase_spark.pyworker"
+        ).config("spark.executorEnv.PYTHONPATH", pkg_parent)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -1449,6 +1449,21 @@ def test_frozen_ivf_pq_refreeze_invalidates_quantizer_cache(spark, tmp_path):
     )
     assert frozen_b == live_b and frozen_b
 
+    # the memo also holds the base tables' schemas: a refreeze under a
+    # different id column must not leave the probe reading `cells`/`codes`
+    # under the previous freeze's column names
+    corpus_c = corpus_b.withColumnRenamed("vec_id", "doc_id")
+    similarity.freeze_ivf_pq(corpus_c, path, nlist=8, m=4, k_codes=8,
+                             id_col="doc_id")
+    qc = corpus_c.filter(F.col("doc_id").isin(q_ids))
+    frozen_c = sorted(
+        tuple(r)
+        for r in similarity.ivf_pq_topk_frozen(
+            qc, path, nprobe=4, k=5, id_col="doc_id"
+        ).collect()
+    )
+    assert frozen_c == frozen_b
+
 
 def test_frozen_probe_pushes_probed_cells_into_the_scan(spark, tmp_path):
     """The frozen probe's corpus restriction must reach the parquet
